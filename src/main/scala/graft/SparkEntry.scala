@@ -124,7 +124,7 @@ object SparkEntry {
           col("turn_ts").as("max_fts"),
           coalesce(col("turn_ts") > col("event_ts"), lit(false)).as("leaked"),
           lit(strategy).as("strategy"))
-      audit(pit.PointInTimeJoin.enrichMerge(ents, v), "merge")
+      audit(pit.PointInTimeJoin.enrich(ents, v), "merge")
         .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v), "join"))
         .unionByName(audit(pit.PointInTimeJoin.enrichJoin(ents, v,
           saltBuckets = 8, hotKeyRowThreshold = 50L), "salted"))
@@ -167,6 +167,25 @@ object SparkEntry {
             .copy(features = Seq("turn_idx", "text_len")),
           convQualityView(s, dir)),
         fullFeatureNames = true, filterByCreatedTs = true)),
+    // Two key groups in one retrieval: two conv_id views plus a user_id
+    // view given between them: one merge-kernel pass per key group, each
+    // joined back onto the entity frame; columns keep the given view order.
+    "pit_multiview_keygroups" -> ((s, dir) => {
+      val ents = Transcripts.entityFrame(s, dir)
+        .withColumn("user_id", substring(col("conv_id"), 6, 20).cast("long"))
+      val userView = FeatureView("user_activity",
+        s.read.parquet(s"$dir/events.parquet").select(col("user_id"),
+          col("ts"), col("event_type").as("last_event"), col("event_id")),
+        Seq("user_id"), "ts", None, 2 * 3600L,
+        features = Seq("last_event"), tieBreakCols = Seq("event_id"))
+      Historical.getHistoricalFeatures(ents,
+        Seq(
+          turnStatsView(s, dir, ttlSec = 4 * 3600L)
+            .copy(features = Seq("turn_idx", "text_len")),
+          userView,
+          convQualityView(s, dir)),
+        fullFeatureNames = true)
+    }),
     // Entityless / global view via DUMMY_ENTITY (J9; feature_view.py:95-108).
     "pit_entityless" -> ((s, dir) => {
       val g = s.read.parquet(s"$dir/events.parquet")
@@ -460,7 +479,9 @@ object SparkEntry {
         mem.addData(onTime); q.processAllAvailable()
         mem.addData(late :+ flush); q.processAllAvailable()
       } finally q.stop()
-      s.table(name).select(col("k"),
+      // the flush row's own window (k = -1) is still open, so append mode
+      // never emits it; filter it anyway, as stream_session_agg does
+      s.table(name).filter(col("k") >= 0).select(col("k"),
         col("win_start").cast("long").as("win_start_sec"),
         col("n_rows"), col("sum_ids"))
     }),
@@ -1384,6 +1405,42 @@ object SparkEntry {
          |  ON j1.conv_id = e.conv_id AND j1.event_ts = e.event_ts
          |LEFT JOIN (SELECT * FROM j2 WHERE rn = 1) j2
          |  ON j2.conv_id = e.conv_id AND j2.event_ts = e.event_ts""".stripMargin),
+    // two conv_id views (j1, j2) and one user_id view (j3) over an entity
+    // frame carrying user_id = the numeric suffix of conv_id
+    "pit_multiview_keygroups" -> withTables(
+      s""", ent AS (
+         |  SELECT *, CAST(substr(conv_id, 6) AS BIGINT) AS user_id FROM entity),
+         |j1 AS (
+         |  SELECT e.conv_id, e.event_ts, f.turn_idx, length(f.text) AS text_len,
+         |    row_number() OVER (PARTITION BY e.conv_id, e.event_ts
+         |                       ORDER BY f.ts DESC, f.turn_idx DESC) AS rn
+         |  FROM (SELECT DISTINCT conv_id, event_ts FROM entity) e
+         |  JOIN transcript f ON f.conv_id = e.conv_id
+         |   AND f.ts <= e.event_ts AND f.ts >= e.event_ts - INTERVAL 4 HOUR),
+         |j2 AS (
+         |  SELECT e.conv_id, e.event_ts, q.score,
+         |    row_number() OVER (PARTITION BY e.conv_id, e.event_ts
+         |                       ORDER BY q.ts DESC, q.created_ts DESC, q.event_id DESC) AS rn
+         |  FROM (SELECT DISTINCT conv_id, event_ts FROM entity) e
+         |  JOIN conv_quality q ON q.conv_id = e.conv_id AND q.ts <= e.event_ts),
+         |j3 AS (
+         |  SELECT e.user_id, e.event_ts, v.event_type AS last_event,
+         |    row_number() OVER (PARTITION BY e.user_id, e.event_ts
+         |                       ORDER BY v.ts DESC, v.event_id DESC) AS rn
+         |  FROM (SELECT DISTINCT user_id, event_ts FROM ent) e
+         |  JOIN events v ON v.user_id = e.user_id
+         |   AND v.ts <= e.event_ts AND v.ts >= e.event_ts - INTERVAL 2 HOUR)
+         |SELECT e.conv_id, e.event_ts, e.label, e.user_id,
+         |  j1.turn_idx AS turn_stats__turn_idx, j1.text_len AS turn_stats__text_len,
+         |  j3.last_event AS user_activity__last_event,
+         |  j2.score AS conv_quality__score
+         |FROM ent e
+         |LEFT JOIN (SELECT * FROM j1 WHERE rn = 1) j1
+         |  ON j1.conv_id = e.conv_id AND j1.event_ts = e.event_ts
+         |LEFT JOIN (SELECT * FROM j2 WHERE rn = 1) j2
+         |  ON j2.conv_id = e.conv_id AND j2.event_ts = e.event_ts
+         |LEFT JOIN (SELECT * FROM j3 WHERE rn = 1) j3
+         |  ON j3.user_id = e.user_id AND j3.event_ts = e.event_ts""".stripMargin),
     "pit_entityless" -> withTables(
       s""", g AS (SELECT ts, value AS gscore, event_id FROM events WHERE event_id % 11 = 0),
          |j AS (

@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** get_historical_features orchestration (reference: sdk/python/feast/
   * feature_store.py:1942-2142 + the rendered multi-view template
-  * spark.py:1709-1887): sequentially enrich the entity frame with each
-  * view's point-in-time features, preserving entity rows/columns and
-  * output order = entity cols, then features per view (offline_utils.py:
-  * 210-234).
+  * spark.py:1709-1887): enrich the entity frame with every view's
+  * point-in-time features — one merge-kernel pass per key group —
+  * preserving entity rows/columns and output order = entity cols, then
+  * features per view (offline_utils.py:210-234).
   */
 object Historical {
 
@@ -61,27 +61,36 @@ object Historical {
     // N-view retrieval must not rescan the entity frame N times
     // (reference computes the range once per job, offline_utils.py:168-189)
     val bounds = Some(PointInTimeJoin.entityBounds(entityDf, entityTsCol))
-    // Multi-view fusion: views sharing the same join keys enrich through
-    // ONE union → shuffle → sort → window pass (enrichMergeFused) instead
-    // of N sequential merges — N-1 fewer shuffles and join-backs.
-    // Created-ts filter mode fuses too (per-view visibility time + running
-    // max_by inside the same single sort). Falls back to the sequential
-    // fold for mixed keys, keyless views, or a Date entity ts (per-view
-    // type-promotion rules differ).
-    val fusable = bounded.size >= 2 &&
-      bounded.head.joinKeys.nonEmpty &&
-      bounded.forall(_.joinKeys == bounded.head.joinKeys) &&
-      entityDf.columns.contains(entityTsCol) &&
-      entityDf.schema(entityTsCol).dataType !=
-        org.apache.spark.sql.types.DateType
-    val out =
-      if (fusable)
-        PointInTimeJoin.enrichMergeFused(entityDf, bounded, entityTsCol,
+    // One merge-kernel pass per key group: views sharing join keys and
+    // time-axis type (PointInTimeJoin.axisType) enrich through ONE union →
+    // shuffle → sort → window pass (enrichMergeFused), created-ts filter
+    // mode included. A lone group keeps the kernel's slim fast path; with
+    // several, each group's pass reads the entity frame itself and the
+    // results fold onto it as left joins, so a group never re-plans the
+    // groups before it. Keyless views take the join path, one at a time.
+    def groupOf(v: FeatureView) =
+      (v.joinKeys, PointInTimeJoin.axisType(entityDf, entityTsCol, v))
+    val keyed = bounded.map(v => (groupOf(v), v))
+    val groups = keyed.map(_._1).distinct.map(g => keyed.collect { case (`g`, v) => v })
+    val folded = groups.foldLeft(entityDf) { (acc, g) =>
+      if (g.head.joinKeys.isEmpty)
+        g.foldLeft(acc)((a, v) => PointInTimeJoin.enrich(a, v, entityTsCol,
+          fullFeatureNames, filterByCreatedTs, precomputedBounds = bounds))
+      else if (groups.size == 1)
+        PointInTimeJoin.enrichMergeFused(acc, g, entityTsCol,
           fullFeatureNames, filterByCreatedTs, precomputedBounds = bounds)
-      else bounded.foldLeft(entityDf) { (acc, v) =>
-        PointInTimeJoin.enrich(acc, v, entityTsCol, fullFeatureNames,
-          filterByCreatedTs, precomputedBounds = bounds)
-      }
+      else acc.join(
+        PointInTimeJoin.mergeLatest(entityDf, g, entityTsCol, fullFeatureNames,
+          filterByCreatedTs, bounds, keepDuplicateProbes = false),
+        g.head.joinKeys :+ entityTsCol, "left")
+    }
+    // interleaved key groups append features group by group; restore the
+    // documented order: entity columns, then each view's in the given order
+    val out =
+      if (groups.flatten == bounded) folded
+      else folded.select((entityDf.columns.toSeq ++ bounded.flatMap(v =>
+        v.resolvedFeatures.map(PointInTimeJoin.outName(v, _, fullFeatureNames))))
+        .map(col): _*)
     val withOdfv = OnDemand.applyAll(out, onDemand, fullFeatureNames,
       knownPrefixes = Some(views.map(_.name).toSet))
     transform.map(_(withOdfv)).getOrElse(withOdfv)

@@ -4,6 +4,7 @@ import graft.FeatureView
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, DateType}
 
 /** Point-in-time ("as-of") join: for each entity row (join keys, event_ts),
   * attach the feature values of the **latest** source row with
@@ -18,22 +19,26 @@ import org.apache.spark.sql.expressions.Window
   * Two physical strategies, neither of which is the reference's
   * (range join → row_number → join back):
   *
-  *  1. **Merge path** ([[enrichMerge]], the default): union feature and
-  *     probe rows, one sort per key on (ts, side, created, tiebreaks), one
-  *     window pass of `last(payload, ignoreNulls)` — each probe row reads
-  *     the latest qualifying feature row directly. No join, no pair
+  *  1. **Merge kernel** ([[enrichMergeFused]], the default): the N ≥ 1
+  *     views of one key group (same join keys, same time-axis type) union
+  *     their feature rows with the probe rows; one shuffle + sort per key
+  *     on (ts, side, created, tiebreaks) and one window pass of per-view
+  *     running `last(payload, ignoreNulls)` let each probe row read every
+  *     view's latest qualifying feature row directly. No join, no pair
   *     blow-up, no aggregation: cost is a single shuffle + sort of
-  *     |features| + |probes| rows regardless of TTL width. This is the
-  *     classic sort-merge as-of algorithm expressed in pure Catalyst.
-  *     The created-ts *filter* mode stays on this path: a feature row is
-  *     visible to a probe iff `event_ts >= greatest(ts, created_ts)`, so
-  *     ordering the merge stream by that visibility time and keeping a
-  *     running `max_by(payload, (ts, created, tiebreaks))` (instead of
-  *     `last`) yields the exact filtered winner with the same single
-  *     sort — no join, no per-key pair blow-up at TTL = 0.
+  *     |features| + |probes| rows regardless of TTL width — the classic
+  *     sort-merge as-of algorithm in pure Catalyst. The created-ts *filter*
+  *     mode stays on this path: a feature row is visible to a probe iff
+  *     `event_ts >= greatest(ts, created_ts)`, so ordering the stream by
+  *     that visibility time and keeping a running
+  *     `max_by(payload, (ts, created, tiebreaks))` (instead of `last`)
+  *     yields the exact filtered winner under the same sort.
+  *     [[graft.engine.Historical]] runs the kernel once per key group;
+  *     [[enrich]] runs it for one view.
   *  2. **Join path** ([[enrichJoin]]): time-bucketed range inner join
   *     (bounded fan-out) → partial-aggregated max_by → left join back.
-  *     Needed for hot-key salting (explicit replication).
+  *     Taken for keyless views and for hot-key salting (explicit
+  *     replication).
   *
   * Shared scale levers (both paths):
   *   - scan bounds [min(event_ts) − ttl, max(event_ts)] derived from the
@@ -73,7 +78,7 @@ object PointInTimeJoin {
         filterByCreatedTs, broadcastThresholdRows, saltBuckets,
         hotKeyRowThreshold, precomputedBounds)
     else
-      enrichMerge(entityDf, view, entityTsCol, fullFeatureNames,
+      enrichMergeFused(entityDf, Seq(view), entityTsCol, fullFeatureNames,
         filterByCreatedTs, precomputedBounds)
 
   /** One entity-frame (min, max) event-ts scan, shared across views of a
@@ -143,193 +148,52 @@ object PointInTimeJoin {
     (src, probe)
   }
 
-  /** The sort-merge as-of path (see object doc, strategy 1).
-    *
-    * Ordering per key: (ts asc, side asc [features before probes at equal
-    * ts — `<=` semantics], created asc nulls-first [nulls lose], tiebreaks
-    * asc); the running `last` of the feature-row payload struct at each
-    * probe row is therefore exactly the max_by(ts, created, tiebreaks)
-    * winner of the prefix. The payload is one struct so a feature row's
-    * columns travel atomically (a legitimately-null feature value must NOT
-    * fall through to an older row). TTL is applied afterwards: the latest
-    * winner is the only candidate — anything older is further below the
-    * window's lower bound.
-    *
-    * Created-ts filter mode (`filterByCreatedTs`, reference template
-    * spark.py:1799-1801 / dask masking dask.py:1203-1226): visibility time
-    * of a feature row becomes `greatest(ts, created_ts)` — `__t <= event_ts`
-    * is then exactly `ts <= event_ts AND created_ts <= event_ts`. The
-    * stream is no longer sorted by the (ts, created, tiebreaks) winner
-    * order, so the running `last` is replaced by a running
-    * `max_by(payload, ord)` over the same window — still one sort, one
-    * pass; the TTL = 0 case stays linear instead of the join path's
-    * per-key quadratic fan-out.
+  /** Time axis of the merge for `view`: the entity ts type, except that a
+    * DateType entity ts promotes to the view's feature-ts type. Casting
+    * feature times DOWN to a date would truncate them to midnight and leak
+    * same-day future rows; the join path's `fts <= ets` promotes too, and
+    * the two strategies must agree. Views sharing join keys and axis type
+    * form one key group: one pass of [[enrichMergeFused]].
     */
-  def enrichMerge(
-      entityDf: DataFrame,
-      view: FeatureView,
-      entityTsCol: String = "event_ts",
-      fullFeatureNames: Boolean = false,
-      filterByCreatedTs: Boolean = false,
-      precomputedBounds: Option[Row] = None
-  ): DataFrame = {
-    val keys = view.joinKeys
-    val feats = view.resolvedFeatures
-    val (src0, probe) = prepare(entityDf, view, entityTsCol, precomputedBounds)
-    val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
-    val createdFilter = filterByCreatedTs && view.createdTsCol.nonEmpty
-    // created-filter mode hides rows with NULL created_ts (SQL semantics of
-    // the reference's `created <= entity_ts` join predicate, spark.py:1799;
-    // dask's NaT compare masks them too, dask.py:1203-1226) — without this,
-    // greatest() below would skip the null and leave the row visible,
-    // diverging from the join path (PropertySpec pins the equivalence)
-    val src =
-      if (createdFilter) src0.filter(col(view.createdTsCol.get).isNotNull)
-      else src0
-
-    // Comparison type for the merged time axis: never cast the feature ts
-    // DOWN to a coarser entity type — a DateType entity frame would
-    // truncate feature times to midnight and leak same-day future rows
-    // (the join path's `fts <= ets` promotes instead; the two strategies
-    // must agree). Dates promote to the feature ts type; otherwise the
-    // entity type wins (e.g. tz vs ntz normalization).
-    val etsType = probe.schema(entityTsCol).dataType match {
-      case org.apache.spark.sql.types.DateType => src.schema(view.tsCol).dataType
+  private[graft] def axisType(entityDf: DataFrame, entityTsCol: String, view: FeatureView): DataType =
+    entityDf.schema(entityTsCol).dataType match {
+      case DateType => view.mappedSource.schema(view.tsCol).dataType
       case t => t
     }
-    val ordNames = view.createdTsCol.map(_ => "__ord_created").toSeq ++
-      view.tieBreakCols.indices.map(i => s"__ord_tb$i")
 
-    // visibility time: when created-filtering, a row only becomes usable
-    // once BOTH its event ts and its created ts have passed (greatest
-    // skips nulls, so a null created_ts falls back to ts alone)
-    val visTime =
-      if (createdFilter)
-        greatest(col(view.tsCol), col(view.createdTsCol.get)).cast(etsType)
-      else col(view.tsCol).cast(etsType)
-
-    // winner order of the created-filter max_by: (ts, created nulls-lose,
-    // tiebreaks) — identical to the join path's ordering struct
-    val ordStruct =
-      if (createdFilter)
-        Seq(when(lit(true), struct((col(view.tsCol).cast(etsType).as("__o_ts") +:
-          (view.createdTsCol.map(c => coalesce(col(c), minTs).as("__o_cr")).toSeq ++
-            view.tieBreakCols.zipWithIndex.map { case (c, i) => col(c).as(s"__o_tb$i") })): _*))
-          .as("__ord"))
-      else Nil
-    val fSide = src.select(
-      keys.map(col) ++
-        Seq(visTime.as("__t"), lit(0).as("__p"),
-          lit(null).cast(etsType).as("__ets"),
-          when(lit(true), struct((feats.map(col) :+
-            col(view.tsCol).cast(etsType).as("__fts")): _*)).as("__payload")) ++
-        ordStruct ++
-        (view.createdTsCol.map(c => coalesce(col(c), minTs).as("__ord_created")).toSeq ++
-          view.tieBreakCols.zipWithIndex.map { case (c, i) => col(c).as(s"__ord_tb$i") }): _*)
-    val payloadType = fSide.schema("__payload").dataType
-    val pSide = probe.select(
-      keys.map(col) ++
-        Seq(col(entityTsCol).cast(etsType).as("__t"), lit(1).as("__p"),
-          col(entityTsCol).as("__ets"),
-          lit(null).cast(payloadType).as("__payload")) ++
-        (if (createdFilter)
-           Seq(lit(null).cast(fSide.schema("__ord").dataType).as("__ord"))
-         else Nil) ++
-        ordNames.map(n => lit(null).cast(
-          fSide.schema(n).dataType).as(n)): _*)
-
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((Seq(col("__t").asc, col("__p").asc) ++
-        ordNames.map(n => col(n).asc_nulls_first)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // Slim fast path: when the entity frame is exactly (keys, event_ts),
-    // the final left join's only job is restoring entity-side columns and
-    // duplicate multiplicity — but every probe row already flows through
-    // the window pass (duplicates are adjacent and read the same running
-    // `last`), so the window output IS the result. Saves the join-back
-    // (one full shuffle of both sides) and the second entity scan — the
-    // whole retrieval becomes scan → one shuffle → sort+window → project.
-    val slim = entityDf.columns.toSet == (keys :+ entityTsCol).toSet
-
-    // running winner: the sorted-stream `last` in normal mode; a running
-    // max_by over (ts, created, tiebreaks) in created-filter mode, where
-    // the stream is visibility-ordered, not winner-ordered (probe rows
-    // carry a null ord and are skipped by max_by)
-    val runningBest =
-      if (createdFilter) max_by(col("__payload"), col("__ord")).over(w)
-      else last(col("__payload"), ignoreNulls = true).over(w)
-    val unioned = fSide.unionByName(pSide)
-      .withColumn("__best", runningBest)
-    val filled =
-      if (slim) unioned.filter(col("__p") === 1)
-      else {
-        // Duplicate entity rows collapse WITHOUT a dedup exchange:
-        // duplicates are adjacent under this sort, so a lag() over the same
-        // window spec (one physical sort serves both functions) marks all
-        // but the first; the join-back below restores multiplicity.
-        val wLag = Window.partitionBy(keys.map(col): _*)
-          .orderBy((Seq(col("__t").asc, col("__p").asc) ++
-            ordNames.map(n => col(n).asc_nulls_first)): _*)
-        unioned
-          .withColumn("__dupProbe",
-            col("__p") === 1 && lag(col("__p"), 1).over(wLag) === 1 &&
-              lag(col("__t"), 1).over(wLag) === col("__t"))
-          .filter(col("__p") === 1 && !coalesce(col("__dupProbe"), lit(false)))
-      }
-
-    val qualified =
-      if (view.ttlSeconds > 0)
-        filled.withColumn("__best",
-          when(col("__best.__fts") >=
-            col("__ets") - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"),
-            col("__best")))
-      else filled
-
-    if (slim)
-      // original entity column order, then features
-      qualified.select(
-        entityDf.columns.toSeq.map(c =>
-          if (c == entityTsCol) col("__ets").as(entityTsCol) else col(c)) ++
-          feats.map(f => col("__best." + f).as(outName(view, f, fullFeatureNames))): _*)
-    else {
-      val latest = qualified.select(
-        keys.map(col) ++ Seq(col("__ets").as(entityTsCol)) ++
-          feats.map(f => col("__best." + f).as(outName(view, f, fullFeatureNames))): _*)
-      entityDf.join(latest, keys :+ entityTsCol, "left")
-    }
-  }
-
-  /** Fused multi-view merge path: N views sharing the SAME join keys enrich
-    * the entity frame through ONE union → ONE shuffle/sort → ONE window pass,
-    * instead of N sequential merges — which cost N full shuffles of the
+  /** The merge kernel (see object doc, strategy 1): the N ≥ 1 views of one
+    * key group enrich the entity frame through ONE union → ONE shuffle/sort
+    * → ONE window pass. N separate passes would cost N full shuffles of the
     * probe+feature stream plus, for every view after the first, a join-back
-    * (the accumulated frame is no longer slim). At cluster scale the fused
-    * plan reads every source once, shuffles once on the shared keys, and
-    * sorts once.
+    * (the accumulated frame is no longer slim).
     *
-    * Mechanics: each view contributes its own payload struct and order
-    * columns, null on every other view's rows and on probe rows. The global
-    * per-key sort is (visibility ts, side, view-0 ord…, view-N ord…): two
-    * rows of the SAME view order among themselves by that view's ord columns
-    * (all other views' ord columns are null on both, comparing equal), and
-    * rows of other views are invisible to view i's running
-    * `last(__payload_i, ignoreNulls)` — so each view's winner is exactly its
-    * single-view merge winner. TTL qualification stays per view.
+    * Ordering per key: (visibility ts asc, side asc [features before probes
+    * at equal ts — `<=` semantics], view-0 ord…, view-N ord… [created asc
+    * nulls-first so nulls lose, then tiebreaks asc]). Each view contributes
+    * its own payload struct and order columns, null on every other view's
+    * rows and on probe rows: two rows of the SAME view order among
+    * themselves by that view's ord columns (every other view's are null on
+    * both, comparing equal), and other views' rows are invisible to view
+    * i's running `last(__payload_i, ignoreNulls)` — so at each probe row it
+    * is exactly view i's max_by(ts, created, tiebreaks) winner of the
+    * prefix. The payload is one struct so a feature row's columns travel
+    * atomically (a legitimately-null feature value must NOT fall through to
+    * an older row). TTL is applied afterwards, per view: the latest winner
+    * is the only candidate — anything older is further below the window's
+    * lower bound.
     *
-    * Created-ts filter mode fuses too (`filterByCreatedTs`): each view with
-    * a created column contributes a per-view visibility time
-    * `greatest(ts, created)` as its merge axis and a per-view running
-    * `max_by(payload_i, (ts, created, tiebreaks))` winner — exactly the
-    * single-view created-filter mechanics ([[enrichMerge]]), per view,
-    * under the same single sort. Views without a created column keep the
-    * running-`last` winner; the two winner kinds coexist in one window
-    * pass because every view's payload and order columns are null on
-    * every other view's rows.
+    * Created-ts filter mode (`filterByCreatedTs`, reference template
+    * spark.py:1799-1801 / dask masking dask.py:1203-1226): a view with a
+    * created column gets the visibility time `greatest(ts, created_ts)` —
+    * `__t <= event_ts` is then exactly `ts <= event_ts AND created_ts <=
+    * event_ts`. That stream is no longer in winner order, so the view's
+    * running `last` becomes a running `max_by(payload_i, (ts, created,
+    * tiebreaks))` — still one sort, one pass. Both winner kinds coexist in
+    * one window pass because every view's payload and order columns are
+    * null on every other view's rows.
     *
-    * Preconditions (the caller, [[graft.engine.Historical]], falls back to
-    * the sequential fold otherwise): ≥ 2 views, identical non-empty
-    * joinKeys, non-Date entity timestamp.
+    * Precondition (enforced): one key group — identical non-empty join
+    * keys and one [[axisType]] across `views`.
     */
   def enrichMergeFused(
       entityDf: DataFrame,
@@ -340,124 +204,99 @@ object PointInTimeJoin {
       precomputedBounds: Option[Row] = None
   ): DataFrame = {
     val keys = views.head.joinKeys
-    require(keys.nonEmpty && views.forall(_.joinKeys == keys),
-      "fused merge requires identical non-empty join keys across views")
-    // Enforce the documented precondition, don't just document it: a
-    // DateType entity ts would cast every feature ts down to midnight here
-    // (no per-view promotion in the fused axis) and leak same-day future
-    // rows — the single-view path promotes instead (enrichMerge), so a
-    // direct caller must go through Historical's fallback for Date frames.
-    require(entityDf.schema(entityTsCol).dataType !=
-      org.apache.spark.sql.types.DateType,
-      "fused merge requires a non-Date entity timestamp; " +
-        "use the sequential enrich path for DateType entity frames")
+    // Slim fast path: when the entity frame is exactly (keys, event_ts),
+    // every probe row (duplicates included — they are adjacent and read
+    // the same running winners) already flows through the window pass, so
+    // its output IS the result: no join-back, no second entity scan.
+    val slim = entityDf.columns.toSet == (keys :+ entityTsCol).toSet
+    val latest = mergeLatest(entityDf, views, entityTsCol, fullFeatureNames,
+      filterByCreatedTs, precomputedBounds, keepDuplicateProbes = slim)
+    if (slim)
+      latest.select((entityDf.columns.toSeq ++ latest.columns.drop(keys.size + 1)).map(col): _*)
+    else entityDf.join(latest, keys :+ entityTsCol, "left")
+  }
+
+  /** One kernel pass over a key group, before assembly: the join keys, the
+    * entity ts and every view's features — one row per probe row with
+    * `keepDuplicateProbes`, else one per distinct (keys, entity ts), ready
+    * for a left join back onto the entity frame.
+    */
+  private[graft] def mergeLatest(
+      entityDf: DataFrame,
+      views: Seq[FeatureView],
+      entityTsCol: String,
+      fullFeatureNames: Boolean,
+      filterByCreatedTs: Boolean,
+      precomputedBounds: Option[Row],
+      keepDuplicateProbes: Boolean
+  ): DataFrame = {
+    val keys = views.head.joinKeys
+    val etsType = axisType(entityDf, entityTsCol, views.head)
+    require(keys.nonEmpty && views.forall(v =>
+      v.joinKeys == keys && axisType(entityDf, entityTsCol, v) == etsType),
+      "merge kernel requires one key group: identical non-empty join keys " +
+        "and one time-axis type across views")
     val bounds = precomputedBounds.getOrElse(entityBounds(entityDf, entityTsCol))
     val prepared = views.map(v => prepare(entityDf, v, entityTsCol, Some(bounds)))
-    val probe = prepared.head._2
-    val etsType = probe.schema(entityTsCol).dataType
     val minTs = lit("1900-01-01 00:00:00").cast("timestamp")
 
-    // per-view column descriptors: payload struct + (ord name, expr, type).
-    // A created-filtered view additionally carries (a) a visibility merge
-    // axis greatest(ts, created) and (b) an order STRUCT for its running
-    // max_by — null on every other view's rows and on probes, so max_by
-    // skips them (mirrors the single-view created-filter path).
-    case class ViewCols(
-        view: FeatureView, src: DataFrame, feats: Seq[String],
-        visTime: Column,
-        payload: Column, payloadType: org.apache.spark.sql.types.DataType,
-        ordStruct: Option[(String, Column, org.apache.spark.sql.types.DataType)],
-        ords: Seq[(String, Column, org.apache.spark.sql.types.DataType)])
-    val infos = views.zipWithIndex.map { case (v, i) =>
-      val createdFilter = filterByCreatedTs && v.createdTsCol.nonEmpty
-      // created-filter mode hides NULL-created rows (SQL semantics of the
-      // reference's `created <= entity_ts` join predicate) — same filter
-      // as the single-view path; PropertySpec pins the equivalence
-      val src =
-        if (createdFilter) prepared(i)._1.filter(col(v.createdTsCol.get).isNotNull)
-        else prepared(i)._1
-      val feats = v.resolvedFeatures
-      val payload = struct((feats.map(col) :+
-        col(v.tsCol).cast(etsType).as("__fts")): _*)
-      val payloadType = src.select(payload.as("p")).schema("p").dataType
-      val visTime =
-        if (createdFilter)
-          greatest(col(v.tsCol), col(v.createdTsCol.get)).cast(etsType)
-        else col(v.tsCol).cast(etsType)
-      val ordStruct =
-        if (createdFilter) {
-          val e = struct((col(v.tsCol).cast(etsType).as("__o_ts") +:
-            (v.createdTsCol.map(c => coalesce(col(c), minTs).as("__o_cr")).toSeq ++
-              v.tieBreakCols.zipWithIndex.map { case (c, k) =>
-                col(c).as(s"__o_tb$k")
-              })): _*)
-          Some((s"__mord_$i", e, src.select(e.as("o")).schema("o").dataType))
-        } else None
-      val ords =
-        v.createdTsCol.map { c =>
-          val e = coalesce(col(c), minTs)
-          (s"__ord_${i}_cr", e, src.select(e.as("o")).schema("o").dataType)
-        }.toSeq ++
-          v.tieBreakCols.zipWithIndex.map { case (c, k) =>
-            (s"__ord_${i}_tb$k", col(c), src.schema(c).dataType)
-          }
-      ViewCols(v, src, feats, visTime, payload, payloadType, ordStruct, ords)
+    // Each view's rows carry only its own columns: the payload, the sort
+    // columns (created nulls-lose, tiebreaks) and, when created-filtered,
+    // the winner-order struct of its running max_by. unionByName fills
+    // every other view's columns (and the probe rows') with typed nulls.
+    val ordNames = views.zipWithIndex.map { case (v, i) =>
+      (v.createdTsCol.toSeq ++ v.tieBreakCols).indices.map(k => s"__ord_${i}_$k")
     }
-    val allOrds = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.ords.map { case (name, e, dt) => (name, i, e, dt) }
+    val createdFiltered = views.map(v => filterByCreatedTs && v.createdTsCol.nonEmpty)
+    val fSides = views.indices.map { i =>
+      val v = views(i)
+      val fts = col(v.tsCol).cast(etsType)
+      val ords = v.createdTsCol.map(c => coalesce(col(c), minTs)).toSeq ++
+        v.tieBreakCols.map(col)
+      // created-filter mode: the visibility time greatest(ts, created) is
+      // the merge axis, and NULL-created rows are hidden (SQL semantics of
+      // the reference's `created <= entity_ts` join predicate; dask's NaT
+      // compare masks them too — greatest() alone would skip the null and
+      // leave the row visible; PropertySpec pins the join-path equivalence)
+      val (src, visTime) =
+        if (createdFiltered(i)) {
+          val c = col(v.createdTsCol.get)
+          (prepared(i)._1.filter(c.isNotNull), greatest(col(v.tsCol), c).cast(etsType))
+        } else (prepared(i)._1, fts)
+      src.select(keys.map(col) ++ Seq(visTime.as("__t"), lit(0).as("__p"),
+        struct((v.resolvedFeatures.map(col) :+ fts.as("__fts")): _*).as(s"__payload_$i")) ++
+        ords.zip(ordNames(i)).map { case (e, n) => e.as(n) } ++
+        (if (createdFiltered(i))
+          Seq(struct((fts +: ords).zipWithIndex.map { case (e, k) => e.as(s"_$k") }: _*)
+            .as(s"__mord_$i"))
+        else Nil): _*)
     }
-    val allOrdStructs = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.ordStruct.map { case (name, e, dt) => (name, i, e, dt) }
-    }
-
-    def sideSelect(df: DataFrame, head: Seq[Column], ownerIdx: Int): DataFrame =
-      df.select(
-        keys.map(col) ++ head ++
-          infos.zipWithIndex.map { case (inf, j) =>
-            if (j == ownerIdx) inf.payload.as(s"__payload_$j")
-            else lit(null).cast(inf.payloadType).as(s"__payload_$j")
-          } ++
-          allOrds.map { case (name, owner, e, dt) =>
-            if (owner == ownerIdx) e.as(name) else lit(null).cast(dt).as(name)
-          } ++
-          allOrdStructs.map { case (name, owner, e, dt) =>
-            if (owner == ownerIdx) e.as(name) else lit(null).cast(dt).as(name)
-          }: _*)
-
-    val fSides = infos.zipWithIndex.map { case (inf, i) =>
-      sideSelect(inf.src, Seq(
-        inf.visTime.as("__t"), lit(0).as("__p"),
-        lit(null).cast(etsType).as("__ets")), i)
-    }
-    val pSide = sideSelect(probe, Seq(
+    val pSide = prepared.head._2.select(keys.map(col) ++ Seq(
       col(entityTsCol).cast(etsType).as("__t"), lit(1).as("__p"),
-      col(entityTsCol).as("__ets")), ownerIdx = -1)
+      col(entityTsCol).as("__ets")): _*)
+    val unioned = (fSides :+ pSide).reduce(_.unionByName(_, allowMissingColumns = true))
 
     val sortCols = Seq(col("__t").asc, col("__p").asc) ++
-      allOrds.map { case (name, _, _, _) => col(name).asc_nulls_first }
+      ordNames.flatten.map(col(_).asc_nulls_first)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val slim = entityDf.columns.toSet == (keys :+ entityTsCol).toSet
-    val unioned = (fSides :+ pSide).reduce(_ unionByName _)
     // per-view running winner: the sorted-stream `last` normally; a running
     // max_by over the view's own (ts, created, tiebreaks) struct in
     // created-filter mode, where the stream is visibility-ordered rather
     // than winner-ordered (other views' rows and probes carry a null ord
     // and are skipped)
-    val withBests = infos.zipWithIndex.foldLeft(unioned) { case (acc, (inf, i)) =>
-      val best = inf.ordStruct match {
-        case Some((name, _, _)) => max_by(col(s"__payload_$i"), col(name)).over(w)
-        case None => last(col(s"__payload_$i"), ignoreNulls = true).over(w)
-      }
-      acc.withColumn(s"__best_$i", best)
+    val withBests = views.indices.foldLeft(unioned) { (acc, i) =>
+      acc.withColumn(s"__best_$i",
+        if (createdFiltered(i)) max_by(col(s"__payload_$i"), col(s"__mord_$i")).over(w)
+        else last(col(s"__payload_$i"), ignoreNulls = true).over(w))
     }
     val filled =
-      if (slim) withBests.filter(col("__p") === 1)
+      if (keepDuplicateProbes) withBests.filter(col("__p") === 1)
       else {
         // duplicate probes are adjacent under the sort (all ord columns
         // null); mark all but the first with a lag over the same window
-        // spec — one physical sort serves every window function here
+        // spec — one physical sort serves every window function here. The
+        // caller's join-back restores their multiplicity.
         val wLag = Window.partitionBy(keys.map(col): _*).orderBy(sortCols: _*)
         withBests
           .withColumn("__dupProbe",
@@ -465,29 +304,19 @@ object PointInTimeJoin {
               lag(col("__t"), 1).over(wLag) === col("__t"))
           .filter(col("__p") === 1 && !coalesce(col("__dupProbe"), lit(false)))
       }
-    val qualified = infos.zipWithIndex.foldLeft(filled) { case (acc, (inf, i)) =>
-      if (inf.view.ttlSeconds > 0)
+    val qualified = views.zipWithIndex.foldLeft(filled) { case (acc, (v, i)) =>
+      if (v.ttlSeconds > 0)
         acc.withColumn(s"__best_$i",
           when(col(s"__best_$i.__fts") >=
-            col("__ets") - expr(s"INTERVAL ${inf.view.ttlSeconds} SECONDS"),
+            col("__ets") - expr(s"INTERVAL ${v.ttlSeconds} SECONDS"),
             col(s"__best_$i")))
       else acc
     }
-
-    val featCols = infos.zipWithIndex.flatMap { case (inf, i) =>
-      inf.feats.map(f =>
-        col(s"__best_$i." + f).as(outName(inf.view, f, fullFeatureNames)))
+    val featCols = views.zipWithIndex.flatMap { case (v, i) =>
+      v.resolvedFeatures.map(f =>
+        col(s"__best_$i." + f).as(outName(v, f, fullFeatureNames)))
     }
-    if (slim)
-      qualified.select(
-        entityDf.columns.toSeq.map(c =>
-          if (c == entityTsCol) col("__ets").as(entityTsCol) else col(c)) ++
-          featCols: _*)
-    else {
-      val latest = qualified.select(
-        keys.map(col) ++ Seq(col("__ets").as(entityTsCol)) ++ featCols: _*)
-      entityDf.join(latest, keys :+ entityTsCol, "left")
-    }
+    qualified.select(keys.map(col) ++ Seq(col("__ets").as(entityTsCol)) ++ featCols: _*)
   }
 
   /** The bucketed range-join path (see object doc, strategy 2). */
@@ -586,7 +415,7 @@ object PointInTimeJoin {
     entityDf.join(latest, keys :+ entityTsCol, "left")
   }
 
-  private def outName(view: FeatureView, feat: String, full: Boolean): String =
+  private[graft] def outName(view: FeatureView, feat: String, full: Boolean): String =
     if (full) s"${view.name}__$feat" else feat
 
   private def shouldBroadcast(df: DataFrame, thresholdRows: Long): Boolean = {

@@ -151,6 +151,58 @@ class PlanContractSpec extends SparkTestBase {
         out.queryExecution.executedPlan)
   }
 
+  private def convTurns(n: Int, stepMs: Long): DataFrame =
+    (1 to n).map { i =>
+      (s"conv${i % 20}", i.toLong % 7, new Timestamp(1700000000000L + i * stepMs),
+        new Timestamp(1700000000000L + i * stepMs + (i % 3) * 86400000L), i)
+    }.toDF("conv_id", "user_id", "ts", "created_ts", "turn_idx")
+
+  test("slim created-filter retrieval of 4 views in one key group is ONE shuffle") {
+    val src = convTurns(500, 60000L)
+    val entity = (1 to 50).map { i =>
+      (s"conv${i % 20}", new Timestamp(1700000000000L + i * 600000L))
+    }.toDF("conv_id", "event_ts")
+    // two views with a created column (visibility time + running max_by),
+    // two without (running last), all under one sort
+    val views = Seq(
+      FeatureView("a", src, Seq("conv_id"), "ts", ttlSeconds = 3600L,
+        features = Seq("turn_idx")),
+      FeatureView("b", src, Seq("conv_id"), "ts", createdTsCol = Some("created_ts"),
+        features = Seq("turn_idx")),
+      FeatureView("c", src.filter(col("turn_idx") % 2 === 0), Seq("conv_id"), "ts",
+        ttlSeconds = 86400L, features = Seq("user_id")),
+      FeatureView("d", src, Seq("conv_id"), "ts", createdTsCol = Some("created_ts"),
+        ttlSeconds = 7200L, features = Seq("user_id"), tieBreakCols = Seq("turn_idx")))
+    val out = engine.Historical.getHistoricalFeatures(entity, views,
+      fullFeatureNames = true, filterByCreatedTs = true)
+    assert(shuffles(out) == 1, "one key group grew shuffles:\n" +
+      out.queryExecution.executedPlan)
+  }
+
+  test("a two-key-group retrieval costs the sum of its groups' shuffles") {
+    val src = convTurns(500, 60000L)
+    val entity = (1 to 50).map { i =>
+      (s"conv${i % 20}", i.toLong % 7, new Timestamp(1700000000000L + i * 600000L))
+    }.toDF("conv_id", "user_id", "event_ts")
+    val convViews = Seq(
+      FeatureView("a", src, Seq("conv_id"), "ts", ttlSeconds = 3600L,
+        features = Seq("turn_idx")),
+      FeatureView("b", src, Seq("conv_id"), "ts", createdTsCol = Some("created_ts"),
+        features = Seq("turn_idx")))
+    val userView = FeatureView("u", src, Seq("user_id"), "ts", ttlSeconds = 7200L,
+      features = Seq("turn_idx"), tieBreakCols = Seq("conv_id"))
+    def cost(views: Seq[FeatureView]): Int = shuffles(engine.Historical
+      .getHistoricalFeatures(entity, views, fullFeatureNames = true))
+    val conv = cost(convViews)
+    val user = cost(Seq(userView))
+    val both = engine.Historical.getHistoricalFeatures(entity,
+      Seq(convViews.head, userView, convViews(1)), fullFeatureNames = true)
+    assert(conv >= 1 && user >= 1)
+    assert(shuffles(both) == conv + user,
+      s"groups alone cost $conv + $user shuffles, together:\n" +
+        both.queryExecution.executedPlan)
+  }
+
   test("TTL-derived scan bounds push into the parquet source scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_plancontract").toString
     (1 to 500).map { i =>

@@ -93,7 +93,7 @@ class PointInTimeJoinSpec extends SparkTestBase {
       features = Seq("v"), tieBreakCols = Seq("v"))
     // both physical strategies must agree: the date promotes to midnight,
     // feature timestamps keep their time-of-day
-    val m = PointInTimeJoin.enrichMerge(entity, v)
+    val m = PointInTimeJoin.enrich(entity, v)
     val j = PointInTimeJoin.enrichJoin(entity, v)
     assert(m.select("v").as[Int].head() == 42, "merge path leaked a future row")
     assert(j.select("v").as[Int].head() == 42)
@@ -165,10 +165,10 @@ class PointInTimeJoinSpec extends SparkTestBase {
     // duplicate probe rows included — multiplicity must be preserved
     val slimEnts = (entities.map { case (c, t, _) => (c, t) } ++
       entities.take(4).map { case (c, t, _) => (c, t) }).toDF("conv_id", "event_ts")
-    val fast = PointInTimeJoin.enrichMerge(slimEnts, view(3600L))
+    val fast = PointInTimeJoin.enrich(slimEnts, view(3600L))
     // same rows through the general path (extra column forces the join-back)
     val general = PointInTimeJoin
-      .enrichMerge(slimEnts.withColumn("label", lit(0.0)), view(3600L))
+      .enrich(slimEnts.withColumn("label", lit(0.0)), view(3600L))
       .drop("label")
     assert(fast.columns.toSeq == Seq("conv_id", "event_ts", "turn_idx", "turn_ts"))
     val key = (r: org.apache.spark.sql.Row) => r.toSeq.map(String.valueOf).mkString("|")
@@ -211,17 +211,66 @@ class PointInTimeJoinSpec extends SparkTestBase {
       sequential.collect().map(rowKey).sorted.toSeq)
   }
 
-  test("fused multi-view merge rejects DateType entity timestamps loudly") {
-    // the fused axis has no per-view Date promotion: a DateType entity ts
-    // would truncate feature times to midnight and leak same-day future
-    // rows — the precondition must be enforced, not just documented
-    // (Historical falls back to the sequential path for Date frames)
-    val dateEntity = entityDf.select(col("conv_id"),
-      col("event_ts").cast("date").as("event_ts"))
-    val e = intercept[IllegalArgumentException] {
-      PointInTimeJoin.enrichMergeFused(dateEntity, Seq(view(3600L), qualityView))
+  test("Date entity ts via Historical: two key groups, no leak, equals join path") {
+    // feature rows later on the probe's own day must stay invisible (the
+    // date promotes to midnight; feature times keep their time-of-day), a
+    // row at exactly midnight stays visible (<=)
+    val turnSrc = Seq(
+      ("c1", ts("2024-01-01 10:00:00"), 111),
+      ("c1", ts("2024-01-01 00:00:00"), 7),
+      ("c1", ts("2023-12-31 09:00:00"), 42),
+      ("c2", ts("2024-01-02 23:59:59"), 5),
+      ("c2", ts("2023-12-25 12:00:00"), 6)).toDF("conv_id", "ts", "a")
+      .withColumn("a_ts", col("ts"))
+    val qualitySrc = Seq[(String, Timestamp, Timestamp, Int)](
+      ("c1", ts("2024-01-01 06:00:00"), ts("2024-01-01 06:00:00"), 3),
+      ("c1", ts("2023-12-31 12:00:00"), ts("2024-01-01 08:00:00"), 1),
+      ("c1", ts("2023-12-30 12:00:00"), ts("2023-12-30 13:00:00"), 2),
+      ("c2", ts("2023-12-31 00:00:00"), null, 4)).toDF("conv_id", "ts", "created_ts", "b")
+      .withColumn("b_ts", col("ts"))
+    val userSrc = Seq(
+      (1L, ts("2024-01-01 12:00:00"), 100),
+      (1L, ts("2023-12-31 18:00:00"), 200),
+      (2L, ts("2024-01-02 01:00:00"), 300),
+      (2L, ts("2024-01-01 23:00:00"), 400)).toDF("user_id", "ts", "u")
+      .withColumn("u_ts", col("ts"))
+    val views = Seq(
+      FeatureView("turns", turnSrc, Seq("conv_id"), "ts", None, 0L,
+        features = Seq("a", "a_ts"), tieBreakCols = Seq("a")),
+      FeatureView("users", userSrc, Seq("user_id"), "ts", None, 86400L,
+        features = Seq("u", "u_ts"), tieBreakCols = Seq("u")),
+      FeatureView("quality", qualitySrc, Seq("conv_id"), "ts", Some("created_ts"),
+        3 * 86400L, features = Seq("b", "b_ts"), tieBreakCols = Seq("b")))
+    val d = java.sql.Date.valueOf(_: String)
+    val entity = Seq(
+      ("c1", 1L, d("2024-01-01"), 1.0),
+      ("c1", 1L, d("2024-01-01"), 2.0), // duplicate probe
+      ("c2", 2L, d("2024-01-02"), 3.0),
+      ("c2", 1L, d("2024-01-01"), 4.0),
+      ("c_none", 9L, d("2024-01-01"), 5.0)).toDF("conv_id", "user_id", "event_ts", "label")
+    for (cf <- Seq(false, true)) {
+      val out = Historical.getHistoricalFeatures(entity, views, filterByCreatedTs = cf)
+      assert(out.columns.toSeq == Seq("conv_id", "user_id", "event_ts", "label",
+        "a", "a_ts", "u", "u_ts", "b", "b_ts"), "views keep the given order")
+      val rows = out.collect()
+      assert(rows.length == entity.count())
+      rows.foreach { r =>
+        val midnight = r.getAs[java.sql.Date]("event_ts").toLocalDate.atStartOfDay
+        for (c <- Seq("a_ts", "u_ts", "b_ts"))
+          Option(r.getAs[Timestamp](c)).foreach(fts =>
+            assert(!fts.toLocalDateTime.isAfter(midnight), s"LEAKAGE in $c: $r"))
+      }
+      assert(rows.filter(_.getAs[String]("conv_id") == "c1")
+        .map(_.getAs[Int]("a")).toSet == Set(7))
+      views.foreach { v =>
+        val cols = (entity.columns.toSeq ++ v.resolvedFeatures).map(col)
+        val got = out.select(cols: _*)
+        val want = PointInTimeJoin.enrichJoin(entity, v, filterByCreatedTs = cf)
+          .select(cols: _*)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"view ${v.name} diverges from the join path (createdFilter=$cf)")
+      }
     }
-    assert(e.getMessage.contains("non-Date entity timestamp"))
   }
 
   test("fused multi-view merge: slim entity frame, dupes kept") {
@@ -257,8 +306,8 @@ class PointInTimeJoinSpec extends SparkTestBase {
     def values(df: org.apache.spark.sql.DataFrame): Seq[(String, Any)] =
       df.select(col("conv_id"), col("turn_idx")).collect()
         .map(r => (r.getAs[String](0), r.get(1))).sortBy(x => String.valueOf(x._1)).toSeq
-    val slim = values(PointInTimeJoin.enrichMerge(ents, v, "event_ts"))
-    val nonSlim = values(PointInTimeJoin.enrichMerge(
+    val slim = values(PointInTimeJoin.enrich(ents, v, "event_ts"))
+    val nonSlim = values(PointInTimeJoin.enrich(
       ents.withColumn("extra", lit(1)), v, "event_ts"))
     val salted = values(PointInTimeJoin.enrichJoin(ents, v, "event_ts",
       saltBuckets = 4))

@@ -44,7 +44,8 @@ class PropertySpec extends SparkTestBase {
       off <- Gen.choose(-600L, 7800L)
     } yield (k, off))
     ttl <- Gen.oneOf(0L, 600L, 3600L)
-  } yield (recs, entities, ttl)
+    // one duplicated probe, so multiplicity is exercised
+  } yield (recs, entities :+ entities.head, ttl)
 
   test("property: PIT join equals brute-force oracle on random tables") {
     samples(tableGen, 12, 0xC0FFEEL).foreach { case (recs, ents, ttl) =>
@@ -81,11 +82,14 @@ class PropertySpec extends SparkTestBase {
         .toDF("k", "event_ts", "row_i")
       val view = FeatureView("v", src, Seq("k"), "ts", Some("created_ts"), ttl,
         features = Seq("v"), tieBreakCols = Seq("tb"))
-      for (cf <- Seq(false, true)) {
-        val m = PointInTimeJoin.enrichMerge(entityDf, view, filterByCreatedTs = cf)
-        val j = PointInTimeJoin.enrichJoin(entityDf, view, filterByCreatedTs = cf)
-        assert(m.except(j).isEmpty && j.except(m).isEmpty,
-          s"physical paths diverge at ttl=$ttl createdFilter=$cf")
+      // with row_i the kernel dedups probes and joins back; without it the
+      // entity frame is slim and every probe row flows through the window
+      for (ents <- Seq(entityDf, entityDf.drop("row_i")); cf <- Seq(false, true)) {
+        val m = PointInTimeJoin.enrichMergeFused(ents, Seq(view), filterByCreatedTs = cf)
+        val j = PointInTimeJoin.enrichJoin(ents, view, filterByCreatedTs = cf)
+        assert(m.exceptAll(j).isEmpty && j.exceptAll(m).isEmpty,
+          s"physical paths diverge at ttl=$ttl createdFilter=$cf " +
+            s"slim=${!ents.columns.contains("row_i")}")
       }
     }
   }
