@@ -37,6 +37,10 @@ import scala.jdk.CollectionConverters._
   * re-filtered to the target partition so overlapping reads never duplicate
   * output. A 1000-executor cluster runs each day's job wide; checkpoint
   * granularity = restart granularity = one day.
+  *
+  * The default job, [[dailyFeatureJob]], is one shuffle per partition with
+  * no join and no broadcast; rows with a null `conv_id` or `turn_idx` are
+  * dropped only after its windows.
   */
 object Backfill {
 
@@ -257,14 +261,28 @@ object Backfill {
 
   /** The default backfill job: per-turn transcript features over the slice.
     * Keeps `ds` so the partition filter applies to the output.
+    *
+    * Output: the slice's columns (`conv_id`, `turn_idx` first), `text_len`,
+    * `session_id`, `turn_in_session`, `tool_cnt_w`, `turn_cnt_w`; one row
+    * per slice row with non-null `conv_id` and `turn_idx`.
+    *
+    * Plan: scan → ONE `Exchange hashpartitioning(conv_id)` → Sort on
+    * (conv_id, ts) for the 4 h range counts → Sort on (conv_id, turn_idx)
+    * for the session windows. No join and no broadcast: the feature windows
+    * append to the whole slice row. They see every slice row (a row with a
+    * null `turn_idx` sorts first in its conversation, so it opens the gap
+    * to turn 0 and counts in the range windows around it); the null-key
+    * rows are dropped only after them.
     */
   def dailyFeatureJob(slice: DataFrame): DataFrame = {
     import graft.feat.TranscriptFeatures
+    val keys = Seq("conv_id", "turn_idx")
     val withLen = slice.withColumn("text_len", length(col("text")))
-    val sess = TranscriptFeatures.sessionize(slice, gapSec = 1800L)
-    val tools = TranscriptFeatures.toolUsage(slice, windowSec = 4 * 3600L)
-    withLen
-      .join(sess, Seq("conv_id", "turn_idx"))
-      .join(tools, Seq("conv_id", "turn_idx"))
+    val feats = TranscriptFeatures.withSessions(
+      TranscriptFeatures.withToolUsage(withLen, windowSec = 4 * 3600L), gapSec = 1800L)
+    val out = keys ++ slice.columns.filterNot(keys.contains) ++
+      Seq("text_len", "session_id", "turn_in_session", "tool_cnt_w", "turn_cnt_w")
+    feats.filter(col("conv_id").isNotNull && col("turn_idx").isNotNull)
+      .select(out.map(col): _*)
   }
 }

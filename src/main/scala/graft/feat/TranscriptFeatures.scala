@@ -14,6 +14,12 @@ import org.apache.spark.sql.expressions.Window
   * shuffle is a hash partition on the conversation key — the natural
   * distribution key at 10^12 turns. Range frames order by epoch
   * microseconds (a long) so frames are exact and codegen-friendly.
+  *
+  * [[withToolUsage]] and [[withSessions]] append their columns to the whole
+  * input row instead of selecting (conv_id, turn_idx) and features, so a
+  * caller chains them over one shuffle with no join back on the keys
+  * ([[graft.engine.Backfill.dailyFeatureJob]]); [[toolUsage]] and
+  * [[sessionize]] are their projections.
   */
 object TranscriptFeatures {
 
@@ -49,12 +55,18 @@ object TranscriptFeatures {
   /** Tool-usage count over a trailing TTL window per conversation:
     * count(tool) skips non-tool turns (tool is null there).
     */
-  def toolUsage(transcript: DataFrame, windowSec: Long): DataFrame = {
+  def toolUsage(transcript: DataFrame, windowSec: Long): DataFrame =
+    withToolUsage(transcript, windowSec)
+      .select("conv_id", "turn_idx", "tool_cnt_w", "turn_cnt_w")
+
+  /** [[toolUsage]]'s counts appended to every column of `transcript`: one
+    * window sorted on (conv_id, ts), no narrowing select.
+    */
+  def withToolUsage(transcript: DataFrame, windowSec: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id"))
       .orderBy(us("ts"))
       .rangeBetween(-windowSec * 1000000L, 0L)
-    transcript.select(
-      col("conv_id"), col("turn_idx"),
+    transcript.select(col("*"),
       count(col("tool")).over(w).as("tool_cnt_w"),
       count(lit(1)).over(w).as("turn_cnt_w"))
   }
@@ -63,19 +75,30 @@ object TranscriptFeatures {
     * greater than `gapSec` (cumulative-sum-of-gap-flags; SURVEY §2.5 last
     * row), plus the turn's 1-based position inside its session.
     */
-  def sessionize(transcript: DataFrame, gapSec: Long): DataFrame = {
+  def sessionize(transcript: DataFrame, gapSec: Long): DataFrame =
+    withSessions(transcript, gapSec)
+      .select("conv_id", "turn_idx", "session_id", "turn_in_session")
+
+  /** [[sessionize]]'s columns appended to every column of `transcript`.
+    * Every window orders by (conv_id, turn_idx), so they share one sort: a
+    * session is a contiguous run of that order (session_id never falls), so
+    * the position inside it is the conversation row number minus the row
+    * number at the session's start, plus one — no second window keyed by
+    * (conv_id, session_id) and no second sort.
+    */
+  def withSessions(transcript: DataFrame, gapSec: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val flagged = transcript.select(
-      col("conv_id"), col("turn_idx"), col("ts"),
-      when(us("ts") - lag(us("ts"), 1).over(w) > gapSec * 1000000L, 1L)
-        .otherwise(0L).as("__new_session"))
-    val withSession = flagged.withColumn(
-      "session_id",
-      sum(col("__new_session")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val ws = Window.partitionBy(col("conv_id"), col("session_id")).orderBy(col("turn_idx"))
-    withSession
-      .withColumn("turn_in_session", row_number().over(ws))
-      .drop("__new_session", "ts")
+    val upToHere = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    transcript
+      .select(col("*"),
+        row_number().over(w).as("__rn"),
+        when(us("ts") - lag(us("ts"), 1).over(w) > gapSec * 1000000L, 1L)
+          .otherwise(0L).as("__new_session"))
+      .select(col("*"),
+        sum(col("__new_session")).over(upToHere).as("session_id"),
+        max(when(col("__new_session") === 1L, col("__rn")).otherwise(1))
+          .over(upToHere).as("__session_start"))
+      .withColumn("turn_in_session", col("__rn") - col("__session_start") + 1)
+      .drop("__rn", "__new_session", "__session_start")
   }
 }

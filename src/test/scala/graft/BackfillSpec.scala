@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Backfill
+import graft.feat.TranscriptFeatures
 import java.nio.file.Files
 
 /** Resumable-backfill properties (north rule): kill mid-run → resume skips
@@ -48,12 +51,142 @@ class BackfillSpec extends SparkTestBase {
       job, lookbackPartitions = 1)
     val a = Backfill.readOutput(spark, s"$tmp/out")
     val b = Backfill.readOutput(spark, s"$tmp/out2")
-    assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
 
     // 5. every output row stayed in its own partition
     val base = source.withColumn("text_len", length(col("text")))
     assert(a.select("conv_id", "turn_idx", "ds").except(
       base.select("conv_id", "turn_idx", "ds")).isEmpty)
+  }
+
+  /** The daily job as three window branches joined back on the keys: the
+    * composition `dailyFeatureJob` had before its windows were fused, with
+    * `sessionize`'s second window keyed by (conv_id, session_id). The
+    * reference for the differential tests below.
+    */
+  private def joinedReference(slice: DataFrame): DataFrame =
+    slice.withColumn("text_len", length(col("text")))
+      .join(referenceSessions(slice), Seq("conv_id", "turn_idx"))
+      .join(referenceToolUsage(slice), Seq("conv_id", "turn_idx"))
+
+  private def us = unix_micros(col("ts").cast("timestamp"))
+
+  private def referenceSessions(slice: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
+    slice
+      .select(col("conv_id"), col("turn_idx"),
+        when(us - lag(us, 1).over(w) > 1800L * 1000000L, 1L).otherwise(0L).as("nf"))
+      .withColumn("session_id", sum(col("nf")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("turn_in_session", row_number().over(
+        Window.partitionBy(col("conv_id"), col("session_id")).orderBy(col("turn_idx"))))
+      .drop("nf")
+  }
+
+  private def referenceToolUsage(slice: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("conv_id")).orderBy(us)
+      .rangeBetween(-4 * 3600L * 1000000L, 0L)
+    slice.select(col("conv_id"), col("turn_idx"),
+      count(col("tool")).over(w).as("tool_cnt_w"),
+      count(lit(1)).over(w).as("turn_cnt_w"))
+  }
+
+  private def sameMultiset(a: DataFrame, b: DataFrame): Boolean =
+    a.columns.toSeq == b.columns.toSeq && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private val day0 = java.sql.Timestamp.valueOf("2026-03-01 00:00:00").getTime
+  /** `d` days, `sec` seconds after 2026-03-01 00:00 UTC. */
+  private def at(d: Int, sec: Long) = new java.sql.Timestamp(day0 + d * 86400000L + sec * 1000L)
+
+  /** Three `ds` days of rows at the features' edges, as parquet. */
+  private lazy val edges: DataFrame = {
+    import spark.implicits._
+    val h = 3600L
+    val rows = Seq[(String, Option[Int], String, Option[String], java.sql.Timestamp)](
+      // gaps of exactly 1800 s (same session) and 1801 s (new session),
+      // equal ts, and a turn exactly 4 h after turn 0 (inclusive range),
+      // past midnight so day 1 needs day 0 as lookback
+      ("a", Some(0), "user", None, at(0, 20 * h)),
+      ("a", Some(1), "tool", Some("bash"), at(0, 20 * h + 1800)),
+      ("a", Some(2), "tool", Some("search"), at(0, 20 * h + 3601)),
+      ("a", Some(3), "assistant", None, at(0, 20 * h + 3601)),
+      ("a", Some(4), "user", None, at(1, 0)),
+      ("a", Some(5), "tool", Some("bash"), at(1, 600)),
+      // turn_idx order differs from ts order
+      ("b", Some(0), "user", None, at(1, 10 * h)),
+      ("b", Some(1), "tool", Some("bash"), at(1, 9 * h)),
+      ("b", Some(2), "assistant", None, at(1, 11 * h)),
+      ("b", Some(3), "tool", Some("editor"), at(1, 9 * h + 1800)),
+      // a null-turn_idx row 50 min before turn 0: it sorts first, so turn
+      // 0 opens a second session and its range window counts the row
+      ("c", None, "tool", Some("bash"), at(2, 9 * h + 600)),
+      ("c", Some(0), "user", None, at(2, 10 * h)),
+      ("c", Some(1), "assistant", None, at(2, 10 * h + 300)),
+      ("c", Some(2), "user", None, at(2, 10 * h + 2400)),
+      // a null conv_id
+      (null, Some(0), "user", None, at(2, 10 * h)),
+      // one conversation over all three days
+      ("d", Some(0), "user", None, at(0, 23 * h)),
+      ("d", Some(1), "tool", Some("browser"), at(1, 1 * h)),
+      ("d", Some(2), "user", None, at(1, 23 * h + 1800)),
+      ("d", Some(3), "tool", Some("bash"), at(2, 900)),
+      ("d", Some(4), "assistant", None, at(2, 3 * h + 1800)))
+    val dir = s"$tmp/edges"
+    rows.toDF("conv_id", "turn_idx", "role", "tool", "ts")
+      .select(col("conv_id"), col("turn_idx"), col("role"),
+        concat_ws(" ", col("role"), col("turn_idx")).as("text"), col("tool"), col("ts"),
+        date_format(col("ts"), "yyyy-MM-dd").as("ds"))
+      .write.partitionBy("ds").mode("overwrite").parquet(dir)
+    spark.read.option("basePath", dir).parquet(dir)
+  }
+
+  test("fused daily job equals the joined window branches on edge rows (exceptAll both ways)") {
+    val nullKey = col("conv_id").isNull || col("turn_idx").isNull
+    for ((name, slice) <- Seq("edges" -> edges, "synthetic" -> source)) {
+      val got = job(slice)
+      assert(sameMultiset(got, joinedReference(slice)),
+        s"$name: fused job differs from the joined branches")
+      assert(got.count() == slice.filter(!nullKey).count(), name)
+    }
+    // the public projections agree with the branches, null-key rows included
+    assert(sameMultiset(TranscriptFeatures.sessionize(edges, 1800L), referenceSessions(edges)))
+    assert(sameMultiset(TranscriptFeatures.toolUsage(edges, 4 * 3600L), referenceToolUsage(edges)))
+    // the edges land where they should
+    def row(c: String, t: Int) = job(edges).filter(col("conv_id") === c && col("turn_idx") === t)
+      .select("session_id", "turn_in_session", "tool_cnt_w", "turn_cnt_w").head()
+    assert(row("a", 1).toSeq == Seq(0L, 2, 1L, 2L))   // 1800 s: same session
+    assert(row("a", 2).toSeq == Seq(1L, 1, 2L, 4L))   // 1801 s: new session; equal ts
+    assert(row("a", 4).toSeq == Seq(2L, 1, 2L, 5L))   // turn 0 exactly 4 h back counts
+    assert(row("c", 0).toSeq == Seq(1L, 1, 1L, 2L))   // the null-turn_idx row counts
+    assert(job(edges).columns.toSeq == Seq("conv_id", "turn_idx", "role", "text", "tool",
+      "ts", "ds", "text_len", "session_id", "turn_in_session", "tool_cnt_w", "turn_cnt_w"))
+  }
+
+  test("fused daily job through Backfill.run equals the joined branches; output_rows = non-null keys") {
+    val runs = Seq("fused" -> (job _), "joined" -> (joinedReference _)).map { case (n, j) =>
+      n -> Backfill.run(spark, edges, "ds", s"$tmp/out_edges_$n", s"$tmp/ckpt_edges_$n",
+        j, lookbackPartitions = 1)
+    }.toMap
+    assert(runs("fused").map(_.partition) == Seq("2026-03-01", "2026-03-02", "2026-03-03"))
+    assert(sameMultiset(Backfill.readOutput(spark, s"$tmp/out_edges_fused"),
+      Backfill.readOutput(spark, s"$tmp/out_edges_joined")))
+    for (r <- runs("fused")) {
+      val keyed = edges.filter(col("ds") === r.partition &&
+        col("conv_id").isNotNull && col("turn_idx").isNotNull).count()
+      assert(r.outputRows == keyed, r.toString)
+    }
+  }
+
+  test("a duplicated (conv_id, turn_idx) yields one output row per input row") {
+    val slice = edges.filter(col("conv_id").isin("b", "c") && col("turn_idx").isNotNull)
+    val dup = slice.unionByName(slice.filter(col("conv_id") === "b" && col("turn_idx") === 2))
+    assert(dup.count() == 8)
+    // the joined branches multiplied a key seen k times into k^3 rows
+    assert(joinedReference(dup).count() == 6 + 8)
+    val got = job(dup)
+    assert(got.count() == 8)
+    assert(sameMultiset(got.select("conv_id", "turn_idx", "ds"),
+      dup.select("conv_id", "turn_idx", "ds")))
   }
 
   test("two interleaved resumes run each partition exactly once; manifests consistent") {
@@ -81,7 +214,7 @@ class BackfillSpec extends SparkTestBase {
       job, lookbackPartitions = 1)
     val a = Backfill.readOutput(spark, s"$tmp/out_race")
     val b = Backfill.readOutput(spark, s"$tmp/out_single")
-    assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
   test("maxPartitions budget counts RUN partitions, not ones another driver holds") {

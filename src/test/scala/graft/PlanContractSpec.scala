@@ -30,6 +30,9 @@ class PlanContractSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
       .linesIterator.count(_.contains("BroadcastExchange"))
 
+  private def sorts(df: DataFrame): Int =
+    df.queryExecution.executedPlan.toString.linesIterator.count(_.contains("Sort ["))
+
   // parquet-backed, not a local Seq: Catalyst constant-folds a LocalRelation
   // into a precomputed LocalTableScan, which would make every contract here
   // pass vacuously — a FileScan forces the real distributed plan
@@ -201,6 +204,32 @@ class PlanContractSpec extends SparkTestBase {
     assert(shuffles(both) == conv + user,
       s"groups alone cost $conv + $user shuffles, together:\n" +
         both.queryExecution.executedPlan)
+  }
+
+  private lazy val turnsByDay: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_planturns").toString
+    Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 15, seed = 5L)
+      .withColumn("ds", date_format(col("ts"), "yyyy-MM-dd"))
+      .write.partitionBy("ds").mode("overwrite").parquet(dir)
+    spark.read.option("basePath", dir).parquet(dir)
+  }
+
+  test("backfill daily feature job is ONE shuffle, no broadcast, no join") {
+    val out = engine.Backfill.dailyFeatureJob(turnsByDay)
+    val plan = out.queryExecution.executedPlan.toString
+    // the feature windows all partition by conv_id: one exchange feeds the
+    // (conv_id, ts) sort of the range counts and the (conv_id, turn_idx)
+    // sort of the session windows
+    assert(shuffles(out) == 1, s"daily job grew shuffles:\n$plan")
+    assert(broadcasts(out) == 0, s"daily job broadcasts:\n$plan")
+    assert(!plan.contains("Join"), s"daily job joins:\n$plan")
+    assert(sorts(out) == 2, s"daily job sorts:\n$plan")
+  }
+
+  test("sessionize is ONE shuffle and ONE sort") {
+    val out = feat.TranscriptFeatures.sessionize(turnsByDay, 1800L)
+    assert(shuffles(out) == 1 && sorts(out) == 1,
+      "sessionize grew a shuffle or a second sort:\n" + out.queryExecution.executedPlan)
   }
 
   test("TTL-derived scan bounds push into the parquet source scan") {
